@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Entity resolution measured on a REAL-VOCABULARY roster at ~1M
@@ -41,13 +41,7 @@ object ErAnchor {
 
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_ER_ROSTER", "1000000").toLong
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("WARN")
     import graft.operators.Er
 
@@ -145,7 +139,7 @@ object ErAnchor {
 
     // ---- record ---------------------------------------------------------
     val full =
-      f"""{"metric":"er1m","roster":$nRoster,"vocab":$v,"mean_name_len":$meanL%.2f,"keys":$nKeys,"distinct_keys":$nDistinctKeys,"keys_per_record":$keysPerRecord%.2f,"model_keys_per_record":$modelKeys%.2f,"key_count_sec":$keySec%.2f,"candidates":$nCand,"links":$nLinks,"fuzzy_pairs_sec":$linkSec%.2f,"twins":$nTruth,"twin_hits":$hits,"recall_milli":$recallMilli,"cpus":$cpus}"""
+      f"""{"metric":"er1m","roster":$nRoster,"vocab":$v,"mean_name_len":$meanL%.2f,"keys":$nKeys,"distinct_keys":$nDistinctKeys,"keys_per_record":$keysPerRecord%.2f,"model_keys_per_record":$modelKeys%.2f,"key_count_sec":$keySec%.2f,"candidates":$nCand,"links":$nLinks,"fuzzy_pairs_sec":$linkSec%.2f,"twins":$nTruth,"twin_hits":$hits,"recall_milli":$recallMilli,"cpus":${LocalSession.cpus}}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("ER1M.json"), full)
     catch { case _: Throwable => () }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The near-dup family at the reference's own 4 GB scale, on REAL text
@@ -51,7 +51,6 @@ object NearDupAnchor {
       "SPARK_GRAFT_NEARDUP_SIZES_MB", "1024,2048,4096")
       .split(",").map(_.trim.toLong).toSeq.sorted
     val outRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale4g/books")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val dfCap = sys.env.getOrElse("SPARK_GRAFT_NEARDUP_DF_CAP", "20").toLong
 
     val genT0 = System.nanoTime()
@@ -61,12 +60,7 @@ object NearDupAnchor {
     val genSec = (System.nanoTime() - genT0) / 1e9
     val perReplica = bytes / nReplicas
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("WARN")
 
     import graft.operators.{Multimodal, NearDup}
@@ -230,7 +224,7 @@ object NearDupAnchor {
       f"""{"mb":$mb%.1f,"replicas":$nRep,"files":${nRep * nBooks},"sig_sec":$sigSec%.2f,"candidates":$nCand,"confirm_sec":$confSec%.2f,"confirmed":$nConf}"""
     }.mkString("[", ",", "]")
     val full =
-      f"""{"metric":"neardup4g","bytes":$bytes,"gen_sec":$genSec%.1f,"minhash_banded_curve":$curveJson,"cand_per_mb_growth_max_over_min":$candGrowth%.2f,"df_cap":{"cap":$dfCap,"sec":$dfSec%.2f,"distinct_shingles":$nShingles,"max_df":$maxDf,"hot_shingles":$hotShingles,"avoided_pairs":$avoided,"paid_pairs":$paid},"phash":{"replicas":$phRep,"files":${phRep * nBooks},"sec":$phSec%.2f,"found":$nFound,"truth":$nTruth,"hit":$hit,"recall_milli":$recallMilli,"precision_milli":$precMilli},"minhash_planted_twins":{"sec":$mhSec%.2f,"corpus_docs":${replicasFor(sizesMb.max) * nBooks},"twins":$nTruthMh,"hit":$hitMh,"recall_milli":$mhRecallMilli,"confirmed_total":$nConfP},"cpus":$cpus}"""
+      f"""{"metric":"neardup4g","bytes":$bytes,"gen_sec":$genSec%.1f,"minhash_banded_curve":$curveJson,"cand_per_mb_growth_max_over_min":$candGrowth%.2f,"df_cap":{"cap":$dfCap,"sec":$dfSec%.2f,"distinct_shingles":$nShingles,"max_df":$maxDf,"hot_shingles":$hotShingles,"avoided_pairs":$avoided,"paid_pairs":$paid},"phash":{"replicas":$phRep,"files":${phRep * nBooks},"sec":$phSec%.2f,"found":$nFound,"truth":$nTruth,"hit":$hit,"recall_milli":$recallMilli,"precision_milli":$precMilli},"minhash_planted_twins":{"sec":$mhSec%.2f,"corpus_docs":${replicasFor(sizesMb.max) * nBooks},"twins":$nTruthMh,"hit":$hitMh,"recall_milli":$mhRecallMilli,"confirmed_total":$nConfP},"cpus":${LocalSession.cpus}}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("NEARDUP4G.json"), full)
     catch { case _: Throwable => () }

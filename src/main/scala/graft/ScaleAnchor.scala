@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** The reference's OWN published scale, reproduced: a ~4 GB corpus
@@ -173,7 +172,6 @@ object ScaleAnchor {
       .split(",").map(_.trim.toLong).toSeq.sorted
     val outRoot = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "target/scale4g/books")
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_SCALE_REPS", "2").toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     val genT0 = System.nanoTime()
     val fullDir = java.nio.file.Paths.get(outRoot)
@@ -181,12 +179,7 @@ object ScaleAnchor {
     val genSec = (System.nanoTime() - genT0) / 1e9
     val perReplica = bytes / nReplicas
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("WARN")
 
     def pipeline(dir: String) = graft.operators.WordStats.fromLines(
@@ -235,9 +228,9 @@ object ScaleAnchor {
     // (1 + (1 − n_cpu/cpus_total)), n_cpu = 90% of cores
     // (example/main.py:54,198,207) — the honest comparison point; the
     // flat 1.95 MB/s is the published 8-CPU figure.
-    val nCpu = math.max(1, (cpus.toInt * 0.9).toInt)
+    val nCpu = math.max(1, (LocalSession.cpus * 0.9).toInt)
     val modelSecPerKb = 0.00050067901 * (8.0 / nCpu) *
-      (1.0 + (1.0 - nCpu.toDouble / cpus.toInt))
+      (1.0 + (1.0 - nCpu.toDouble / LocalSession.cpus))
     val modelMbPerSec = 1.0 / (modelSecPerKb * 1024)
 
     val curve = points.map(p =>
@@ -247,7 +240,7 @@ object ScaleAnchor {
     // scan-bound; the verdict's bar is ±15% ⇒ ≤ ~1.35 max/min)
     val flat = points.map(_.mbPerSec).max / points.map(_.mbPerSec).min
     val line =
-      f"""{"metric":"scale4g_wordstats_mb_per_sec","value":${top.mbPerSec}%.2f,"unit":"MB/s","bytes":$bytes,"mb":${top.mb}%.1f,"files":${nReplicas * nBooks},"replicas":$nReplicas,"gen_sec":$genSec%.1f,"wall_sec":${top.wall}%.2f,"reps":$reps,"rows":${top.rows},"dedup_audit_rows":$audit,"audit_sec":$auditSec%.2f,"curve":$curve,"curve_flat_max_over_min":$flat%.2f,"baseline_published_mb_per_sec":1.95,"baseline_model_mb_per_sec":$modelMbPerSec%.2f,"x_published":${top.mbPerSec / 1.95}%.1f,"x_model":${top.mbPerSec / modelMbPerSec}%.1f,"cpus":$cpus}"""
+      f"""{"metric":"scale4g_wordstats_mb_per_sec","value":${top.mbPerSec}%.2f,"unit":"MB/s","bytes":$bytes,"mb":${top.mb}%.1f,"files":${nReplicas * nBooks},"replicas":$nReplicas,"gen_sec":$genSec%.1f,"wall_sec":${top.wall}%.2f,"reps":$reps,"rows":${top.rows},"dedup_audit_rows":$audit,"audit_sec":$auditSec%.2f,"curve":$curve,"curve_flat_max_over_min":$flat%.2f,"baseline_published_mb_per_sec":1.95,"baseline_model_mb_per_sec":$modelMbPerSec%.2f,"x_published":${top.mbPerSec / 1.95}%.1f,"x_model":${top.mbPerSec / modelMbPerSec}%.1f,"cpus":${LocalSession.cpus}}"""
     println(line)
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("SCALE4G.json"), line)

@@ -75,19 +75,12 @@ object StreamSoak {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val n = sys.env.getOrElse("SPARK_GRAFT_STREAM_SOAK_TRANCHES", "8").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // n >= 5 keeps the LAST tranche out of its own flatness baseline:
     // at n = 4 the last tranche (index 3) would sit inside the 2..4
     // median window, biasing last/median toward 1 and weakening the
     // growth signal this record exists to certify
     require(n >= 5, s"need >= 5 tranches for a flatness ratio, got $n")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("WARN")
 
     val work = java.nio.file.Files.createTempDirectory("graft_stream_soak")

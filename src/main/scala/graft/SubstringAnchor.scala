@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The substring-granular dedup family (Lee et al. recast —
@@ -53,7 +53,6 @@ object SubstringAnchor {
       .split(",").map(_.trim.toLong).toSeq.sorted
     val outRoot = sys.env.getOrElse(
       "SPARK_GRAFT_SUBSTR_DIR", "target/scale4g/books_plain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
     // ---- plain-copy corpus (the reference's literal recipe) ---------
     val genT0 = System.nanoTime()
@@ -62,12 +61,7 @@ object SubstringAnchor {
     val genSec = (System.nanoTime() - genT0) / 1e9
     val perReplica = bytes / nReplicas
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("WARN")
 
     import graft.operators.NearDup
@@ -164,7 +158,7 @@ object SubstringAnchor {
         f"""{"mb":$mb%.1f,"replicas":$nRep,"docs":$nDocs,"grams":$grams,"dup_stats_sec":$sec%.2f,"full_span_exact":$exact,"docs_out":$out,"span_recall_milli":$recall}"""
     }.mkString("[", ",", "]")
     val full =
-      f"""{"metric":"substr2g","bytes":$bytes,"gen_sec":$genSec%.1f,"detection_curve":$curveJson,"wall_per_mb_growth_max_over_min":$wallGrowth%.2f,"grams_per_mb_growth_max_over_min":$gramGrowth%.2f,"rewrite":{"mb":${curve.head._1}%.1f,"sec":$rwSec%.2f,"docs":$nRw,"non_canonical":$nonCanon,"emptied_exact":$emptiedOk,"emptied_milli":$emptiedMilli,"canonical_kept_text":$canonKept,"kept_tokens":$keptTokens,"total_tokens":$totalTokens},"cpus":$cpus}"""
+      f"""{"metric":"substr2g","bytes":$bytes,"gen_sec":$genSec%.1f,"detection_curve":$curveJson,"wall_per_mb_growth_max_over_min":$wallGrowth%.2f,"grams_per_mb_growth_max_over_min":$gramGrowth%.2f,"rewrite":{"mb":${curve.head._1}%.1f,"sec":$rwSec%.2f,"docs":$nRw,"non_canonical":$nonCanon,"emptied_exact":$emptiedOk,"emptied_milli":$emptiedMilli,"canonical_kept_text":$canonKept,"kept_tokens":$keptTokens,"total_tokens":$totalTokens},"cpus":${LocalSession.cpus}}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("SUBSTR2G.json"), full)
     catch { case _: Throwable => () }

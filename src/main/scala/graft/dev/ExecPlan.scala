@@ -1,7 +1,5 @@
 package graft.dev
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the EXECUTED adaptive plan (final, with ReusedExchange /
   * AQEShuffleRead nodes) of named battery queries — explain() on an
   * un-run adaptive plan shows isFinalPlan=false without reuse markers,
@@ -11,14 +9,10 @@ import org.apache.spark.sql.SparkSession
   */
 object ExecPlan {
   def main(args: Array[String]): Unit = {
+    val usage = "runMain graft.dev.ExecPlan <sfDir> <query...>"
+    ProbeArgs.check(usage, args.headOption, args.drop(1).toSeq)
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     for (q <- args.drop(1)) {
       val df = graft.SparkEntry.queries(q)(spark, sfDir)

@@ -1,7 +1,6 @@
 package graft.dev
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart, SparkListenerJobEnd}
-import org.apache.spark.sql.SparkSession
 
 /** r17 optimization-round instrumentation: per-query wall decomposition.
   *
@@ -16,15 +15,12 @@ import org.apache.spark.sql.SparkSession
   */
 object OptProbe {
   def main(args: Array[String]): Unit = {
+    val usage = "runMain graft.dev.OptProbe <sfDir> <reps> <query...>"
+    ProbeArgs.check(usage, args.headOption, args.drop(2).toSeq)
     val sfDir = args(0)
-    val reps = args(1).toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val reps = args(1).toIntOption.filter(_ > 0)
+      .getOrElse(ProbeArgs.fail(usage, s"reps must be a positive integer, got ${args(1)}"))
+    val spark = graft.LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
 
     @volatile var jobs = 0

@@ -16,17 +16,11 @@ import org.apache.spark.sql.SparkSession
 object ScaleProbe {
 
   private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val s = graft.LocalSession()
     // partitions override: per-task memory experiments (e.g. the ER
     // shuffle_hash build) need partitions sized independently of cores
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+      .foreach(s.conf.set("spark.sql.shuffle.partitions", _))
     s.sparkContext.setLogLevel("ERROR")
     s
   }

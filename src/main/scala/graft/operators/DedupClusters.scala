@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -39,27 +39,6 @@ object DedupClusters {
     * 40 alternations cover any conceivable corpus (2^20 diameter). */
   val MaxRounds = 40
 
-  /** Large-star: every node connects its LARGER neighbors to the
-    * minimum of its neighborhood (incl. itself). Two shuffles.
-    *
-    * NO distinct here (r17): within a round the output feeds ONLY
-    * [[smallStar]], whose min-agg is duplicate-insensitive and whose
-    * own round-end distinct restores set semantics — so the edge SET
-    * per round (and the Kiveris et al. |E| non-increase guarantee,
-    * which needs dedup once per round) is unchanged, while each round
-    * saves one full exchange + aggregation pass. Pre-distinct volume
-    * is exactly one row per input edge (each undirected edge survives
-    * the v > u filter once), so the duplicates smallStar absorbs are
-    * bounded by per-node degree, never a blow-up. */
-  private def largeStar(edges: DataFrame): DataFrame = {
-    val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
-    val mins = sym.groupBy("u").agg(least(min(col("v")), col("u")).as("m"))
-    sym.join(mins, "u")
-      .where(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .where(col("u") =!= col("v"))
-  }
-
   /** Small-star: orient edges large→small, then every node connects its
     * (smaller) neighbors — and itself — to the neighborhood minimum. */
   private def smallStar(edges: DataFrame): DataFrame = {
@@ -71,6 +50,33 @@ object DedupClusters {
       .union(mins.select(col("u"), col("m").as("v")))
       .where(col("u") =!= col("v"))
       .distinct()
+  }
+
+  /** One contraction round: large-star, then small-star. Large-star is
+    * local to the round because its output is only valid as small-star's
+    * input (see below); no other caller can reach it. */
+  private def starRound(edges: DataFrame): DataFrame = {
+    /** Large-star: every node connects its LARGER neighbors to the
+      * minimum of its neighborhood (incl. itself). Two shuffles.
+      *
+      * NO distinct here (r17): within a round the output feeds ONLY
+      * [[smallStar]], whose min-agg is duplicate-insensitive and whose
+      * own round-end distinct restores set semantics — so the edge SET
+      * per round (and the Kiveris et al. |E| non-increase guarantee,
+      * which needs dedup once per round) is unchanged, while each round
+      * saves one full exchange + aggregation pass. Pre-distinct volume
+      * is exactly one row per input edge (each undirected edge survives
+      * the v > u filter once), so the duplicates smallStar absorbs are
+      * bounded by per-node degree, never a blow-up. */
+    def largeStar(edges: DataFrame): DataFrame = {
+      val sym = edges.union(edges.select(col("v").as("u"), col("u").as("v")))
+      val mins = sym.groupBy("u").agg(least(min(col("v")), col("u")).as("m"))
+      sym.join(mins, "u")
+        .where(col("v") > col("u"))
+        .select(col("v").as("u"), col("m").as("v"))
+        .where(col("u") =!= col("v"))
+    }
+    smallStar(largeStar(edges))
   }
 
   /** Convergence probe: the alternating algorithm's fixed points are
@@ -130,15 +136,9 @@ object DedupClusters {
       .distinct())
     var converged = isStarForest(edges)
     var round = 0
-    val sess = pairs.sparkSession
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevAqe = sess.conf.get(aqeKey)
-    val loopAqe = sys.env.contains("GRAFT_AB_LOOP_AQE")
-    if (!loopAqe) sess.conf.set(aqeKey, "false")
-    try {
     while (!converged && round < MaxRounds) {
       val prev = edges
-      edges = trunc(smallStar(largeStar(edges)))
+      edges = trunc(starRound(edges))
       // the probe is the materializing action for the lazy round; only
       // AFTER it has run are prev's blocks dead (the new round read
       // them) — release then, instead of waiting for driver GC, or a
@@ -153,7 +153,6 @@ object DedupClusters {
       graft.core.IterCheckpoint.release(prev)
       round += 1
     }
-    } finally if (!loopAqe) sess.conf.set(aqeKey, prevAqe)
     require(converged, s"components() did not converge in $MaxRounds rounds")
     // Star forest: every non-root points at its component min; roots
     // (the minima themselves) have no outgoing edge — add them back.

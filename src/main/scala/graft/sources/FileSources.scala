@@ -151,15 +151,16 @@ final case class ChunkedTextSource(
           "metacharacters { } [ ] * ? \\ (FileInputFormat glob-expands " +
           "each input path): " +
           files.filter(p => p.exists(globMeta)).take(3).mkString(", "))
-      val conf = new org.apache.hadoop.conf.Configuration(
+      // a per-read copy: the split size never reaches the session
+      val hadoopConf = new org.apache.hadoop.conf.Configuration(
         spark.sessionState.newHadoopConf())
       maxSplitBytes.foreach { b =>
         require(b >= 1, s"maxSplitBytes must be >= 1, got $b")
-        conf.setLong("mapreduce.input.fileinputformat.split.maxsize", b)
+        hadoopConf.setLong("mapreduce.input.fileinputformat.split.maxsize", b)
       }
       val rdd = spark.sparkContext
         .newAPIHadoopFile(files.mkString(","), classOf[TextInputFormat],
-          classOf[LongWritable], classOf[Text], conf)
+          classOf[LongWritable], classOf[Text], hadoopConf)
         .asInstanceOf[org.apache.spark.rdd.NewHadoopRDD[LongWritable, Text]]
       rdd
         .mapPartitionsWithInputSplit { (split, iter) =>

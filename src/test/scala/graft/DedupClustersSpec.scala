@@ -37,6 +37,14 @@ class DedupClustersSpec extends SparkSpecBase {
     assert(comps(Seq.empty) === Map.empty)
   }
 
+  test("components leaves the session conf untouched") {
+    // the session may be shared with other jobs: a conf flipped for the
+    // contraction loop would change their plans too
+    val before = spark.conf.getAll
+    assert(comps((0L until 9L).map(i => (i, i + 1))).size === 10)
+    assert(spark.conf.getAll === before)
+  }
+
   test("resolve emits cluster size and exactly one canonical doc per cluster") {
     val res = DedupClusters
       .resolve(Seq((1L, 2L), (2L, 3L), (8L, 9L)).toDF("doc_a", "doc_b"))
